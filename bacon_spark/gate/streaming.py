@@ -155,12 +155,7 @@ def q44_streaming_tumbling(spark, sf_dir):
     # complete mode re-emits full state per batch; the memory sink keeps
     # only the latest emission, so the final table is the merged state.
     # Skip the trailing no-data batch (nothing to flush, see q62).
-    prev_nd = spark.conf.get("spark.sql.streaming.noDataMicroBatches.enabled", "true")
-    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    try:
-        run_stream_to_memory(out, "q44_stream", mode="complete")
-    finally:
-        spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", prev_nd)
+    run_stream_to_memory(out, "q44_stream", mode="complete", no_data_batches=False)
     return spark.table("q44_stream")
 
 
@@ -226,18 +221,16 @@ def q54_incremental_maintenance(spark, sf_dir):
 
     from ..accumulators import Sum as SumAcc
     from ..engine import CuttingBoard
+    from ..session import conf_override
     from ..streaming.incremental import stream_into_board
+    from ..streaming.windows import _SCRATCH_STREAM_CONFS, scratch_dir
 
     events = _read(spark, sf_dir, "events")
-    # r14: the IVM staging dir is run-scoped scratch exactly like every
-    # stream checkpoint — scratch_dir puts it on tmpfs (per-micro-batch
-    # fsyncs off the data disk) and, because the final slice is eagerly
+    # the IVM staging dir is run-scoped scratch exactly like every stream
+    # checkpoint — scratch_dir puts it on tmpfs (per-micro-batch fsyncs
+    # off the data disk) and, because the final slice is eagerly
     # checkpointed below (the q141 pattern), the dir is removed instead
-    # of leaking one events copy per run. Measured flat-after-warmup at
-    # sf0.1 (4 interleaved pairs, hashes identical); the cleanup is the
-    # point at sweep SFs, where the leaked copy is GBs of tmpfs.
-    from ..streaming.windows import scratch_checkpoint_conf, scratch_dir
-
+    # of leaking one events copy per run (GBs of tmpfs at sweep SFs)
     d = scratch_dir("bacon_ivm_")
     data, ckpt = os.path.join(d, "data"), os.path.join(d, "ckpt")
     try:
@@ -251,7 +244,7 @@ def q54_incremental_maintenance(spark, sf_dir):
 
         b = CuttingBoard(cd, spark.read.parquet(data), snapshot_cache=True)
         stream = spark.readStream.schema(spark.read.parquet(data).schema).parquet(data)
-        with scratch_checkpoint_conf(spark):  # run-scoped scratch ckpt
+        with conf_override(spark, _SCRATCH_STREAM_CONFS):
             sq = stream_into_board(stream, b, ckpt)
         try:
             sq.processAllAvailable()  # catch up before priming (consistency contract)
@@ -323,12 +316,7 @@ def q62_streaming_oracle(spark, sf_dir):
     # no-data micro-batch would recompute and re-emit all of it for
     # nothing (no watermark-gated flush to trigger here), so skip it:
     # one data batch total
-    prev_nd = spark.conf.get("spark.sql.streaming.noDataMicroBatches.enabled", "true")
-    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    try:
-        run_stream_to_memory(out, "q62_stream", mode="complete")
-    finally:
-        spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", prev_nd)
+    run_stream_to_memory(out, "q62_stream", mode="complete", no_data_batches=False)
     return spark.table("q62_stream")
 
 
@@ -623,18 +611,14 @@ def q67_streaming_overlap_join(spark, sf_dir):
         "e_lo", "e_up", "p_lo", "p_up",
         on=["user_id"], prefix="r_", delay="35 days", shards=shards,
     )
-    prev_nd = spark.conf.get("spark.sql.streaming.noDataMicroBatches.enabled", "true")
     # symmetric-join emission happens in the batch where the second side
     # arrives — the trailing no-data micro-batch emits nothing here (no
     # watermark-gated flush like the as-of queries), so skip it: ONE
     # trigger total
-    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    try:
-        run_stream_to_memory(
-            out, "q67_stream", mode="append", state_partitions=shards
-        )
-    finally:
-        spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", prev_nd)
+    run_stream_to_memory(
+        out, "q67_stream", mode="append", state_partitions=shards,
+        no_data_batches=False,
+    )
     return spark.table("q67_stream").select(
         "user_id",
         F.date_format("d", "yyyy-MM-dd").alias("day"),
@@ -694,6 +678,24 @@ def q75_streaming_dedup_groups(spark, sf_dir):
     return spark.table("q75_stream")
 
 
+def _max_real_ts(spark, d):
+    """Max REAL event time of the staged stream input at *d* (sentinel
+    rows excluded), as a UTC-aware datetime: a naive one would go
+    through the driver's OS zone when PySpark turns it into a literal.
+    The value comes from the staged input's stats sidecar, warmed at
+    staging time, so this is a metadata read; the exact aggregate is
+    pinned in tests/test_sketch.py and a cold sidecar self-heals by
+    scanning."""
+    from ..operators.scale import max_event_time_stats
+
+    max_us = max_event_time_stats(spark, d, "ts", exclude_type="sent")["max_us"]
+    if max_us is None:
+        raise ValueError(f"staged stream input {d} has no non-sentinel events")
+    return dt.datetime(1970, 1, 1, tzinfo=dt.timezone.utc) + dt.timedelta(
+        microseconds=max_us
+    )
+
+
 def _stage_q85(spark, sf_dir):
     """Full fixture + one far-future sentinel event (its own session,
     filtered out by the query): ONE sentinel, TWO triggers — batch 0
@@ -718,7 +720,7 @@ def _stage_q85(spark, sf_dir):
         return [("", ev.select(*cols), "overwrite"), ("", sent1, "append")]
 
     d = staged_input("q85", sf_dir, stages)
-    # r14: warm the max-REAL-ts sidecar at staging time so the query's
+    # warm the max-REAL-ts sidecar at staging time so the query's
     # sentinel-exclusion bound is a cached-metadata read, never a timed
     # corpus scan (the q183/q189 key_cardinality_stats pattern)
     from ..operators.scale import max_event_time_stats
@@ -770,18 +772,7 @@ def q85_streaming_session(spark, sf_dir):
     )
 
     d = _stage_q85(spark, sf_dir)
-    # max REAL ts (sentinel excluded) from the staged input's stats
-    # sidecar (r14): warmed at staging time, so this is a metadata read
-    # — the inline agg re-scanned the full staged corpus for one scalar
-    # on every run. Value is the identical exact aggregate (pinned in
-    # tests/test_scale_ops.py); self-heals by scanning on a cold sidecar.
-    from ..operators.scale import max_event_time_stats
-
-    hi = dt.datetime(1970, 1, 1) + dt.timedelta(
-        microseconds=max_event_time_stats(spark, d, "ts", exclude_type="sent")[
-            "max_us"
-        ]
-    )
+    hi = _max_real_ts(spark, d)
     stream = (
         spark.readStream.schema(
             "event_id long, ts timestamp, user_id long, event_type string, value double, props string"
@@ -854,7 +845,7 @@ def _stage_q99(spark, sf_dir):
         ]
 
     d = staged_input("q99", sf_dir, stages)
-    # r14: warm the max-REAL-ts sidecar (see _stage_q85)
+    # warm the max-REAL-ts sidecar (see _stage_q85)
     from ..operators.scale import max_event_time_stats
 
     max_event_time_stats(spark, d, "ts", exclude_type="sent")
@@ -928,14 +919,7 @@ def q99_watermark_late_drop(spark, sf_dir):
         "value double, props string"
     )
     d = _stage_q99(spark, sf_dir)
-    # max REAL ts via the staged input's stats sidecar (r14, see q85)
-    from ..operators.scale import max_event_time_stats
-
-    hi = dt.datetime(1970, 1, 1) + dt.timedelta(
-        microseconds=max_event_time_stats(spark, d, "ts", exclude_type="sent")[
-            "max_us"
-        ]
-    )
+    hi = _max_real_ts(spark, d)
     stream = (
         spark.readStream.schema(sschema).option("maxFilesPerTrigger", 1).parquet(d)
     )
@@ -1101,7 +1085,8 @@ def q141_streaming_cdc_upsert(spark, sf_dir):
 
     from ..operators.maintenance import manifest_read
     from ..streaming.sink import idempotent_batch_writer
-    from ..streaming.windows import scratch_checkpoint_conf, scratch_dir
+    from ..session import conf_override
+    from ..streaming.windows import _SCRATCH_STREAM_CONFS, scratch_dir
 
     src = _stage_q141(spark, sf_dir)
     out = scratch_dir("bacon_q141out_")
@@ -1114,7 +1099,7 @@ def q141_streaming_cdc_upsert(spark, sf_dir):
             .parquet(src)
         )
         writer = idempotent_batch_writer(out)
-        with scratch_checkpoint_conf(spark):  # per-run scratch ckpt
+        with conf_override(spark, _SCRATCH_STREAM_CONFS):
             q = (
                 stream.writeStream.foreachBatch(writer)
                 .option("checkpointLocation", ckpt)
@@ -1229,12 +1214,10 @@ def q167_streaming_distinct_sketch(spark, sf_dir):
     reg_stream = _sk.hll_registers(
         stream.select("window_start", "user_id"), "user_id", ["window_start"]
     )
-    prev_nd = spark.conf.get("spark.sql.streaming.noDataMicroBatches.enabled", "true")
-    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    try:
-        run_stream_to_memory(reg_stream, "q167_stream", mode="complete")
-    finally:
-        spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", prev_nd)
+    # complete mode: the trailing no-data batch would only re-emit (q62)
+    run_stream_to_memory(
+        reg_stream, "q167_stream", mode="complete", no_data_batches=False
+    )
     reg = spark.table("q167_stream")
     est = _sk.hll_estimate(reg, ["window_start"]).select(
         "window_start", "buckets_used", F.col("hll_estimate").alias("approx_users")
@@ -1336,12 +1319,10 @@ def q176_streaming_quantile_sketch(spark, sf_dir):
     hist_stream = _sk.hist_sketch(
         stream.select("window_start", "v"), "v", ["window_start"]
     )
-    prev_nd = spark.conf.get("spark.sql.streaming.noDataMicroBatches.enabled", "true")
-    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    try:
-        run_stream_to_memory(hist_stream, "q176_stream", mode="complete")
-    finally:
-        spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", prev_nd)
+    # complete mode: the trailing no-data batch would only re-emit (q62)
+    run_stream_to_memory(
+        hist_stream, "q176_stream", mode="complete", no_data_batches=False
+    )
     hist = spark.table("q176_stream")
     est = _sk.hist_quantiles(hist, (50, 95, 99), ["window_start"])
 
@@ -1434,23 +1415,18 @@ def q183_streaming_funnel(spark, sf_dir):
     snaps = streaming_funnel_steps(
         stream, steps, horizon="7 days", watermark="3650 days"
     )
-    prev_nd = spark.conf.get("spark.sql.streaming.noDataMicroBatches.enabled", "true")
-    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    try:
-        # width 16 (r13, measured): the per-user Python-state fold is
-        # bound by per-trigger Arrow round-trips, not store commits —
-        # unlike the JVM-state streams (q44/q64/q99 measured WORSE at
-        # 16), doubling the stateful width runs more of those
-        # round-trips in parallel: every interleaved A/B pair ahead at
-        # 32 cores (median 2.47 -> 2.14 s) AND at 8 cores (3.26 ->
-        # 3.18), results identical (state is per-user; the width only
-        # moves cost). NB run_stream_to_memory's state_partitions is a
-        # CAP on the session's shuffle-partition setting, never a
-        # raise, so 16 is a no-op (and the 8-core number only holds)
-        # when the session runs with >16 shuffle partitions.
-        run_stream_to_memory(snaps, "q183_stream", mode="update", state_partitions=16)
-    finally:
-        spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", prev_nd)
+    # width 16, measured: the per-user Python-state fold is bound by
+    # per-trigger Arrow round-trips, not store commits — unlike the
+    # JVM-state streams (q44/q64/q99 measured WORSE at 16), doubling the
+    # stateful width runs more of those round-trips in parallel (every
+    # interleaved A/B pair ahead, results identical: state is per-user,
+    # the width only moves cost). state_partitions is a CAP on the
+    # session's shuffle-partition setting, never a raise. The update-mode
+    # fold has nothing for a no-data batch to flush, so skip it.
+    run_stream_to_memory(
+        snaps, "q183_stream", mode="update", state_partitions=16,
+        no_data_batches=False,
+    )
     latest = latest_funnel_steps(spark.table("q183_stream"))
     return funnel_counts_from_steps(latest, steps)
 
@@ -1486,12 +1462,7 @@ def q188_streaming_funnel_sharded(spark, sf_dir):
     snaps = streaming_funnel_steps_sharded(
         stream, steps, horizon="7 days", watermark="3650 days", shards=64
     )
-    prev_nd = spark.conf.get("spark.sql.streaming.noDataMicroBatches.enabled", "true")
-    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    try:
-        run_stream_to_memory(snaps, "q188_stream", mode="update")
-    finally:
-        spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", prev_nd)
+    run_stream_to_memory(snaps, "q188_stream", mode="update", no_data_batches=False)
     latest = latest_funnel_steps(spark.table("q188_stream"))
     return funnel_counts_from_steps(latest, steps)
 
@@ -1540,17 +1511,14 @@ def q189_streaming_funnel_auto(spark, sf_dir):
         # per-query scan — repeat funnel queries pay zero extra jobs
         estimate_path=d,
     )
-    prev_nd = spark.conf.get("spark.sql.streaming.noDataMicroBatches.enabled", "true")
-    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    try:
-        # width 16 (r13): same measured trade as q183 — the per-user
-        # route (taken at bench cardinalities) is Arrow-round-trip
-        # bound (A/B median 3.22 -> 2.78 s, every pair), and the
-        # sharded route's 64 logical shard keys spread over 16
-        # partitions instead of 8 (the 8-shard q188 form, where width
-        # beyond the key count buys nothing, keeps the default).
-        run_stream_to_memory(snaps, "q189_stream", mode="update", state_partitions=16)
-    finally:
-        spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", prev_nd)
+    # width 16: same measured trade as q183 — the per-user route (taken
+    # at bench cardinalities) is Arrow-round-trip bound, and the sharded
+    # route's 64 logical shard keys spread over 16 partitions instead of
+    # 8 (q188, where width beyond the key count buys nothing, keeps the
+    # default)
+    run_stream_to_memory(
+        snaps, "q189_stream", mode="update", state_partitions=16,
+        no_data_batches=False,
+    )
     latest = latest_funnel_steps(spark.table("q189_stream"))
     return funnel_counts_from_steps(latest, steps)

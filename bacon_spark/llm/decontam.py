@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..session import conf_override
 from .dedup import shingles
 
 #: word n-gram size for the overlap test (8-13 in published decontamination
@@ -96,17 +97,15 @@ def contaminated_ids_bloom(
     the same cost profile as ``df.stat.bloomFilter``, but the probe
     stays in codegen instead of a per-row Python call.
 
-    r14 (job-trace fold, guide §5): the bitmap is built from the RAW
-    eval gram stream — duplicate grams set the same bits, so the
-    distinct exchange (and the r13 persist whose only point was sharing
-    that distinct with the verify join) is gone from the BLOCKING path
+    The bitmap is built from the RAW eval gram stream — duplicate grams
+    set the same bits, so no distinct exchange sits on the BLOCKING path
     that gates the probe plan; the verify broadcast computes its own
-    distinct, the canonical build-side-scanned-twice bloom shape (guide
-    §3.2). The bitmap aggregate's output is structurally bounded
-    (≤ m_bits/64 = 2048 words at any SF), so its collect runs with AQE
-    pinned off: a fixed 2-stage static plan in ONE driver job instead of
-    AQE's per-stage jobs (measured 11→9 jobs for the full query; wall
-    flat within noise at sf0.1, the win is driver round-trips)."""
+    distinct, the canonical build-side-scanned-twice bloom shape. The
+    bitmap aggregate's output is structurally bounded (≤ m_bits/64 =
+    2048 words at any SF), so its collect runs with AQE pinned off: a
+    fixed 2-stage static plan in ONE driver job instead of AQE's
+    per-stage jobs (measured 11→9 jobs for the full query; wall flat
+    within noise at sf0.1, the win is driver round-trips)."""
     text = F.col(text) if isinstance(text, str) else text
     grams = train.select(F.col(id_col), F.explode(shingles(text, k)).alias("gram"))
     raw_ev = eval_df.select(F.explode(shingles(text, k)).alias("gram"))
@@ -129,14 +128,8 @@ def contaminated_ids_bloom(
         .groupBy("word")
         .agg(F.expr("bit_or(bit)").alias("bits"))
     )
-    spark = eval_df.sparkSession
-    aqe_conf = "spark.sql.adaptive.enabled"
-    prev_aqe = spark.conf.get(aqe_conf)
-    spark.conf.set(aqe_conf, "false")
-    try:
+    with conf_override(eval_df.sparkSession, {"spark.sql.adaptive.enabled": "false"}):
         words = words_q.collect()
-    finally:
-        spark.conf.set(aqe_conf, prev_aqe)
     bitmap = [0] * (m_bits // 64)
     for r in words:
         bitmap[r["word"]] = r["bits"]

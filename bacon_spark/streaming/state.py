@@ -21,13 +21,11 @@ decide) instead of every call site hand-setting a Spark conf string.
 The conf is captured per-query at START (Structured Streaming pins
 ``spark.sql.streaming.stateStore.providerClass`` into the query's
 offset-log metadata), so two queries on one session can use different
-providers; :func:`state_store_conf` context-manages the session conf
-around ``start()`` and restores it afterwards.
+providers; ``run_stream_to_memory(state_provider=...)`` sets the resolved
+class through :func:`bacon_spark.session.conf_override` around ``start()``.
 """
 
 from __future__ import annotations
-
-from contextlib import contextmanager
 
 HDFS_PROVIDER = (
     "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider"
@@ -41,7 +39,6 @@ ROCKSDB_PROVIDER = (
 #: outgrow the executor heap — the bench's on-heap OOM at ~1.9M rows).
 ROCKSDB_CROSSOVER_STATE_ROWS = 100_000
 
-_PROVIDER_CONF = "spark.sql.streaming.stateStore.providerClass"
 _ALIASES = {
     "hdfs": HDFS_PROVIDER,
     "rocksdb": ROCKSDB_PROVIDER,
@@ -63,31 +60,6 @@ def choose_state_store_provider(
     if expected_state_rows is not None and expected_state_rows >= ROCKSDB_CROSSOVER_STATE_ROWS:
         return ROCKSDB_PROVIDER
     return HDFS_PROVIDER
-
-
-@contextmanager
-def state_store_conf(
-    spark, provider: str | None, expected_state_rows: int | None = None
-):
-    """Set the state-store provider conf for a query about to start, then
-    restore the session's previous value. ``provider=None`` leaves the
-    session conf untouched (the caller manages it)."""
-    if provider is None:
-        yield None
-        return
-    resolved = choose_state_store_provider(provider, expected_state_rows)
-    try:
-        prev = spark.conf.get(_PROVIDER_CONF)
-    except Exception:
-        prev = None
-    spark.conf.set(_PROVIDER_CONF, resolved)
-    try:
-        yield resolved
-    finally:
-        if prev is None:
-            spark.conf.unset(_PROVIDER_CONF)
-        else:
-            spark.conf.set(_PROVIDER_CONF, prev)
 
 
 def state_operator_metrics(query) -> list[dict]:

@@ -136,54 +136,24 @@ _SCRATCH_STREAM_CONFS = {
 }
 
 
-def scratch_checkpoint_conf(spark):
-    """Context manager: pin the scratch-checkpoint conf overrides above
-    for a query about to ``start()``, restoring the session conf after.
-    Durable production checkpoints should keep the defaults: set
-    ``BACON_STREAM_DURABLE_CKPT=1`` (or don't route through this helper)
-    and the session conf is left untouched."""
-    import contextlib
-    import os
-
-    @contextlib.contextmanager
-    def _cm():
-        if os.environ.get("BACON_STREAM_DURABLE_CKPT") == "1":
-            yield
-            return
-        prev = {}
-        for conf, val in _SCRATCH_STREAM_CONFS.items():
-            try:
-                prev[conf] = spark.conf.get(conf)
-            except Exception:
-                prev[conf] = None
-            spark.conf.set(conf, val)
-        try:
-            yield
-        finally:
-            for conf, old in prev.items():
-                if old is None:
-                    spark.conf.unset(conf)
-                else:
-                    spark.conf.set(conf, old)
-
-    return _cm()
-
-
 def run_stream_to_memory(
     stream_df: DataFrame, name: str, mode: str = "complete",
-    checkpoint: str | None = None,
     state_provider: str | None = None,
     expected_state_rows: int | None = None,
     state_partitions: int | None = 8,
+    no_data_batches: bool = True,
 ):
     """Drive a streaming frame to a memory sink with availableNow (process
     everything queued, then stop) — the test/verification harness path.
+    The checkpoint is run-scoped scratch (:func:`scratch_dir`), removed
+    when the query finishes, and the query runs with
+    :data:`_SCRATCH_STREAM_CONFS`.
 
     *state_provider* picks the state-store backend for THIS query
     (``"hdfs"``, ``"rocksdb"``, a provider class, or ``"auto"`` to decide
     from *expected_state_rows* against the measured RocksDB crossover —
     see streaming/state.py and SCALE.md's state-bound table). ``None``
-    (default) leaves the session conf untouched. The conf is pinned into
+    (default) keeps the session's provider. The conf is pinned into
     the query at ``start()``, so concurrent queries on one session can
     use different providers.
 
@@ -193,38 +163,46 @@ def run_stream_to_memory(
     micro-batch, so a 32-partition session pays 32 store snapshots per
     trigger for fixture-sized state — measured ~30-60% of these
     verification runs' wall time. Results are partitioning-independent;
-    a production job sizes this to its state volume instead (the conf is
-    restored after start, and a LARGER session setting is never raised)."""
-    from .state import state_store_conf
+    a production job sizes this to its state volume instead (a LARGER
+    session setting is never raised).
 
-    w = (
-        stream_df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(mode)
-        .trigger(availableNow=True)
-    )
-    own_ckpt = checkpoint is None
-    if own_ckpt:
-        checkpoint = scratch_dir(f"ckpt_{name}_")
+    ``no_data_batches=False`` skips the trailing no-data micro-batch
+    availableNow otherwise runs. Keep it on where that batch does work
+    (a watermark-gated append flush); complete-mode and symmetric-join
+    runs emit nothing in it.
+
+    Every override holds from ``start()`` through ``awaitTermination()``
+    and the session conf is restored afterwards."""
+    from ..session import conf_override
+    from .state import choose_state_store_provider
+
     spark = stream_df.sparkSession
+    confs = dict(_SCRATCH_STREAM_CONFS)
     sp_conf = "spark.sql.shuffle.partitions"
-    prev_sp = spark.conf.get(sp_conf)
-    if state_partitions is not None and int(prev_sp) > state_partitions:
-        spark.conf.set(sp_conf, str(state_partitions))
+    if state_partitions is not None and int(spark.conf.get(sp_conf)) > state_partitions:
+        confs[sp_conf] = str(state_partitions)
+    if state_provider is not None:
+        confs["spark.sql.streaming.stateStore.providerClass"] = (
+            choose_state_store_provider(state_provider, expected_state_rows)
+        )
+    if not no_data_batches:
+        confs["spark.sql.streaming.noDataMicroBatches.enabled"] = "false"
+    checkpoint = scratch_dir(f"ckpt_{name}_")
     try:
-        with state_store_conf(
-            stream_df.sparkSession, state_provider, expected_state_rows
-        ), scratch_checkpoint_conf(spark):
-            q = w.option("checkpointLocation", checkpoint).start()
+        with conf_override(spark, confs):
+            q = (
+                stream_df.writeStream.format("memory")
+                .queryName(name)
+                .outputMode(mode)
+                .trigger(availableNow=True)
+                .option("checkpointLocation", checkpoint)
+                .start()
+            )
+            q.awaitTermination()
     finally:
-        spark.conf.set(sp_conf, prev_sp)
-    try:
-        q.awaitTermination()
-    finally:
-        if own_ckpt:
-            import shutil
+        import shutil
 
-            shutil.rmtree(checkpoint, ignore_errors=True)
+        shutil.rmtree(checkpoint, ignore_errors=True)
     return q
 
 

@@ -6,7 +6,11 @@ that bound the line: the nav block is trimmed to its headline steps, and
 the worst-case serialized length of a full 189-query line stays inside a
 conservative window estimate."""
 
+import ast
 import json
+import os
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def test_nav_emitted_steps_are_the_headline_sequence():
@@ -14,6 +18,49 @@ def test_nav_emitted_steps_are_the_headline_sequence():
 
     assert bench.NAV_EMITTED_STEPS == (
         "parse", "s1_cold", "s2_repeat", "s3_drill", "s4_drill2", "s5_rollup",
+    )
+
+
+def _engine_nav_step_names():
+    """Step names ``tools/bench_nav.engine_nav`` records, read statically:
+    the string literals passed to its ``run*("…")`` helpers and used as
+    ``steps["…"]`` keys."""
+    with open(os.path.join(ROOT, "tools", "bench_nav.py")) as fh:
+        tree = ast.parse(fh.read())
+    fn = next(
+        n for n in tree.body if isinstance(n, ast.FunctionDef) and n.name == "engine_nav"
+    )
+    names = set()
+    for node in ast.walk(fn):
+        if (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Name)
+            and node.func.id.startswith("run")
+            and node.args
+        ):
+            lit = node.args[0]
+        elif (
+            isinstance(node, ast.Subscript)
+            and isinstance(node.value, ast.Name)
+            and node.value.id == "steps"
+        ):
+            lit = node.slice
+        else:
+            continue
+        if isinstance(lit, ast.Constant) and isinstance(lit.value, str):
+            names.add(lit.value)
+    return names
+
+
+def test_nav_emitted_steps_are_produced_by_engine_nav():
+    """bench.py keeps only the emitted steps found in engine_nav's step
+    dict, so a renamed step would silently empty the nav block."""
+    import bench
+
+    produced = _engine_nav_step_names()
+    assert "s1_cold" in produced and "q04_repeat" in produced  # reader sanity
+    assert set(bench.NAV_EMITTED_STEPS) <= produced, (
+        set(bench.NAV_EMITTED_STEPS) - produced
     )
 
 

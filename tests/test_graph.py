@@ -108,12 +108,11 @@ def test_cc_duplicate_multi_edges_and_star_internals(spark):
     assert inner.count() <= e_dd.count()
 
 
-def test_cc_observe_signature_matches_agg_signature(spark, monkeypatch):
-    """r14 pin: the per-round convergence signature moved from a separate
-    aggregate job (r13, kept under BACON_CC_SIG=agg) to a CollectMetrics
-    observation on the eager round checkpoint — both forms must converge
-    to identical labels on a duplicate-heavy multi-component graph AND on
-    a chain (multi-round fixpoint), and agree with union-find."""
+def test_cc_observe_signature_matches_union_find(spark):
+    """The per-round convergence signature is a CollectMetrics
+    observation on the eager round checkpoint: it must converge to the
+    union-find labels on a duplicate-heavy multi-component graph AND on
+    a chain (multi-round fixpoint)."""
     rng = random.Random(21)
     edges = [(rng.randrange(120), rng.randrange(120)) for _ in range(90)]
     edges += [(500 + i, 501 + i) for i in range(12)]  # a chain: >2 rounds
@@ -122,11 +121,7 @@ def test_cc_observe_signature_matches_agg_signature(spark, monkeypatch):
     df = spark.createDataFrame([Row(src=a, dst=b) for a, b in dup])
     want = _union_find(edges)
 
-    monkeypatch.setenv("BACON_CC_SIG", "agg")
-    agg_out = _got(connected_components(df))
-    monkeypatch.delenv("BACON_CC_SIG")
-    obs_out = _got(connected_components(df))
-    assert agg_out == obs_out == want
+    assert _got(connected_components(df)) == want
 
 
 def test_triangle_count_known_graphs(spark):

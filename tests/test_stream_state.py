@@ -13,6 +13,7 @@ import tempfile
 import pytest
 from pyspark.sql import functions as F
 
+from bacon_spark.session import conf_override
 from bacon_spark.streaming import windows as W
 from bacon_spark.streaming.state import (
     HDFS_PROVIDER,
@@ -20,7 +21,6 @@ from bacon_spark.streaming.state import (
     ROCKSDB_PROVIDER,
     choose_state_store_provider,
     state_operator_metrics,
-    state_store_conf,
 )
 
 SCHEMA = "event_id long, ts timestamp, user_id long, event_type string, value double"
@@ -52,16 +52,49 @@ def test_provider_policy_encodes_measured_crossover():
     )
 
 
-def test_state_store_conf_sets_and_restores(spark):
-    conf = "spark.sql.streaming.stateStore.providerClass"
-    before = spark.conf.get(conf)
-    with state_store_conf(spark, "auto", expected_state_rows=10**6) as resolved:
-        assert resolved == ROCKSDB_PROVIDER
-        assert spark.conf.get(conf) == ROCKSDB_PROVIDER
-    assert spark.conf.get(conf) == before
-    with state_store_conf(spark, None) as resolved:  # None = untouched
-        assert resolved is None
-        assert spark.conf.get(conf) == before
+def test_conf_override_sets_and_restores(spark):
+    set_key = "spark.sql.shuffle.partitions"
+    unset_key = "spark.bacon.test.conf_override"  # never set anywhere
+    before = spark.conf.get(set_key, None)
+    assert before is not None and spark.conf.get(unset_key, None) is None
+    confs = {set_key: "3", unset_key: "x"}
+    with conf_override(spark, confs):
+        assert spark.conf.get(set_key) == "3"
+        assert spark.conf.get(unset_key) == "x"
+    assert spark.conf.get(set_key, None) == before
+    assert spark.conf.get(unset_key, None) is None  # unset again, not ""
+    with pytest.raises(RuntimeError, match="body failed"):
+        with conf_override(spark, confs):
+            raise RuntimeError("body failed")
+    assert spark.conf.get(set_key, None) == before
+    assert spark.conf.get(unset_key, None) is None
+
+
+def test_run_stream_to_memory_leaves_session_conf_unchanged(spark, tmpdir):
+    keys = (
+        "spark.sql.shuffle.partitions",
+        "spark.sql.streaming.stateStore.providerClass",
+        "spark.sql.streaming.noDataMicroBatches.enabled",
+        *W._SCRATCH_STREAM_CONFS,
+    )
+    before = {k: spark.conf.get(k, None) for k in keys}
+    stream = _staged_stream(spark, tmpdir, 5)
+    agg = W.tumbling_window_agg(
+        stream, {"n": F.count(F.lit(1))}, window="1 hour",
+        keys=("user_id",), watermark="1 hour",
+    )
+    q = W.run_stream_to_memory(
+        agg, "t_conf_scope", mode="append", state_provider="rocksdb",
+        state_partitions=2, no_data_batches=False,
+    )
+    assert {k: spark.conf.get(k, None) for k in keys} == before
+    # the overrides reached the query: one trigger per staged file and no
+    # trailing watermark-flush batch, a 2-partition RocksDB state store
+    assert len(q.recentProgress) == 3
+    ms = state_operator_metrics(q)
+    assert {m["numShufflePartitions"] for m in ms} == {2}
+    customs = [m.get("customMetrics") or {} for m in ms]
+    assert any(any("rocksdb" in k.lower() for k in c) for c in customs), customs
 
 
 def _staged_stream(spark, tmpdir, n_users=25):

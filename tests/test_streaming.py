@@ -665,3 +665,50 @@ def test_state_shards_data_driven(tmp_path):
 
     # the real fixtures all sit at the floor
     assert _state_shards("/root/testdata/sf0.1") == 8
+
+
+def _stage_with_sentinel(spark, path, real_ts):
+    rows = [(t, "click") for t in real_ts] + [(dt.datetime(2099, 1, 1), "sent")]
+    spark.createDataFrame(rows, "ts timestamp, event_type string").write.parquet(path)
+
+
+def test_max_real_ts_bound_is_exact_on_a_non_utc_driver(spark, tmp_path):
+    """q85/q99 filter on ``lit(max real ts)``. PySpark turns a NAIVE
+    datetime literal into an instant through the driver's OS zone, so the
+    bound must be UTC-aware: under a non-UTC TZ its literal must still
+    equal the sidecar's max_us exactly."""
+    import os
+    import time
+
+    from bacon_spark.gate.streaming import _max_real_ts
+    from bacon_spark.operators.scale import max_event_time_stats
+
+    path = str(tmp_path / "staged")
+    _stage_with_sentinel(spark, path, [dt.datetime(2024, 1, 5, 12, 30, 0, 250)])
+    max_us = max_event_time_stats(spark, path, "ts", exclude_type="sent")["max_us"]
+    prev_tz = os.environ.get("TZ")
+    os.environ["TZ"] = "America/New_York"
+    time.tzset()
+    try:
+        bound = _max_real_ts(spark, path)
+        naive = bound.replace(tzinfo=None)
+        got, got_naive = spark.range(1).select(
+            F.unix_micros(F.lit(bound)), F.unix_micros(F.lit(naive))
+        ).first()
+    finally:
+        if prev_tz is None:
+            del os.environ["TZ"]
+        else:
+            os.environ["TZ"] = prev_tz
+        time.tzset()
+    assert got == max_us
+    assert got_naive != max_us  # the zone really was in effect
+
+
+def test_max_real_ts_names_an_all_sentinel_input(spark, tmp_path):
+    from bacon_spark.gate.streaming import _max_real_ts
+
+    path = str(tmp_path / "only_sentinel")
+    _stage_with_sentinel(spark, path, [])
+    with pytest.raises(ValueError, match="only_sentinel"):
+        _max_real_ts(spark, path)

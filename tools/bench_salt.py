@@ -43,6 +43,7 @@ def main():
     from pyspark.sql import functions as F
 
     from bacon_spark.operators.scale import salted_join
+    from bacon_spark.session import conf_override
 
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     spark = (
@@ -90,16 +91,12 @@ def main():
     results["plain_aqe"] = timed(lambda: big.join(dim, "k").count())
     # tuned AQE: drop the skew thresholds so the splitter definitely
     # engages on this partition size (defaults: 256 MB / factor 5)
-    spark.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "16m")
-    spark.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2")
-    spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "16m")
-    results["plain_aqe_tuned"] = timed(lambda: big.join(dim, "k").count())
-    for c in (
-        "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
-        "spark.sql.adaptive.skewJoin.skewedPartitionFactor",
-        "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-    ):
-        spark.conf.unset(c)
+    with conf_override(spark, {
+        "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes": "16m",
+        "spark.sql.adaptive.skewJoin.skewedPartitionFactor": "2",
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes": "16m",
+    }):
+        results["plain_aqe_tuned"] = timed(lambda: big.join(dim, "k").count())
     set_aqe(False)
     results["salted"] = timed(lambda: salted_join(big, dim, "k", 16).count())
     set_aqe(True)

@@ -25,6 +25,7 @@ MODULES = [
     ("bacon_spark.accumulators", "Accumulators (reference aggregate semantics)"),
     ("bacon_spark.filters", "Filter operators"),
     ("bacon_spark.engine", "CuttingBoard: the executor"),
+    ("bacon_spark.session", "Session conf overrides"),
     ("bacon_spark.cubenav", "Interactive navigation"),
     ("bacon_spark.builders.url", "URL query DSL"),
     ("bacon_spark.sql", "SQL pushdown source"),

@@ -48,6 +48,7 @@ def run_funnel(spark, args):
     same rationale as the tumbling bench's --mode update note. Input is
     staged as ts-ordered files (per-user event-time order across
     triggers, the Kafka key-ordering reality q183 documents)."""
+    from bacon_spark.session import conf_override
     from bacon_spark.sources.star import read_table
     from bacon_spark.streaming.funnel import (
         streaming_funnel_steps,
@@ -148,23 +149,22 @@ def run_funnel(spark, args):
         snaps = streaming_funnel_steps(
             stream, steps, horizon="7 days", watermark="3650 days"
         )
-    sp_conf = "spark.sql.shuffle.partitions"
-    prev_sp = spark.conf.get(sp_conf)
-    spark.conf.set(sp_conf, str(args.state_partitions))
     ckpt = scratch_dir("funnel_ckpt_")
     t0 = time.perf_counter()
     try:
-        q = (
-            snaps.writeStream.format("noop")
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        q.awaitTermination()
+        with conf_override(
+            spark, {"spark.sql.shuffle.partitions": str(args.state_partitions)}
+        ):
+            q = (
+                snaps.writeStream.format("noop")
+                .outputMode("update")
+                .trigger(availableNow=True)
+                .option("checkpointLocation", ckpt)
+                .start()
+            )
+            q.awaitTermination()
         wall = time.perf_counter() - t0
     finally:
-        spark.conf.set(sp_conf, prev_sp)
         shutil.rmtree(ckpt, ignore_errors=True)
         shutil.rmtree(d, ignore_errors=True)
 
