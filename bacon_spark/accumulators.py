@@ -149,8 +149,10 @@ class Min(Accumulator):
 
     @staticmethod
     def py_merge(values):
+        # NaN is the largest value, as in Spark: it wins only alone
         vals = [v for v in values if v is not None]
-        return min(vals) if vals else None
+        nums = [v for v in vals if v == v]
+        return min(nums) if nums else (vals[0] if vals else None)
 
     py_agg = py_merge
 
@@ -169,8 +171,10 @@ class Max(Accumulator):
 
     @staticmethod
     def py_merge(values):
+        # NaN is the largest value, as in Spark: any NaN wins
         vals = [v for v in values if v is not None]
-        return max(vals) if vals else None
+        nans = [v for v in vals if v != v]
+        return nans[0] if nans else (max(vals) if vals else None)
 
     py_agg = py_merge
 

@@ -36,6 +36,20 @@ Scale note (100 TB): cube *results* are small (bounded by group count) even
 when inputs are huge, so persisting results is cheap; the wins come from
 never re-scanning the fact table for drill/roll-up navigation sequences,
 which is precisely the reference's design intent.
+
+The collect path: a query no driver-side form can answer gets an
+*unordered* result plan (aggregate, cache reuse or lattice).
+``Slice.collect`` runs that plan as one result job and orders the rows on
+the driver with ``CuttingBoard._py_order``, the twin of ``_order`` that
+the warm memo and the cold fold use too, with Spark's null and NaN
+placement (``_sort_key``). A fresh aggregate that is collected becomes its
+slice-cache entry as the collected rows (``_CachedSlice``): nothing is
+persisted for a second job to materialize, an entry made of rows cannot
+change when the source path does, and later drills and roll-ups read
+those rows on the driver like the warm memo. Only ``Slice.df`` /
+``to_df()`` build the ordered plan; a fresh aggregate first used that way
+is persisted (or checkpointed) as before. ``refresh`` starts a new
+generation: a slice planned before it caches nothing.
 """
 
 from __future__ import annotations
@@ -43,9 +57,11 @@ from __future__ import annotations
 import functools
 import threading
 from collections import OrderedDict
+from operator import itemgetter
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Row
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, FloatType
 from pyspark.storagelevel import StorageLevel
 
 from .cubedef import CubeDef
@@ -62,6 +78,87 @@ from .filters import (
 )
 
 __all__ = ["CuttingBoard", "Slice", "keyset_page"]
+
+
+def _sort_key(v):
+    """A Python sort key that orders values as Spark does: null below
+    every value, NaN above every number and equal to itself, arrays and
+    structs element by element under the same rules."""
+    if v is None:
+        return (0, 0)
+    if isinstance(v, (list, tuple)):
+        return (1, tuple(map(_sort_key, v)))
+    if v != v:  # NaN
+        return (2, 0)
+    return (1, v)
+
+
+#: the one NaN object driver-side group keys use: Spark groups every NaN
+#: together, while a dict matches two NaN keys only when they are one object
+_NAN = float("nan")
+
+
+def _group_value(v):
+    """A hashable group key that groups as Spark does: every NaN one key,
+    arrays and structs by value."""
+    if isinstance(v, (list, tuple)):
+        return tuple(map(_group_value, v))
+    return _NAN if isinstance(v, float) and v != v else v
+
+
+def _as_rows(schema, rows: list) -> list:
+    """*rows* (tuples in schema order, or Rows) as Rows of the schema."""
+    if rows and not isinstance(rows[0], Row):
+        mk = Row(*schema.names)
+        rows = [mk(*t) for t in rows]
+    return rows
+
+
+def _too_many_rows(max_rows: int) -> QueryError:
+    return QueryError(
+        f"slice has more than {max_rows} rows; refusing to "
+        "collect for rendering — add filters, drop an axis, "
+        "or page through rows()/keyset_page instead"
+    )
+
+
+def _collect_at_most(df: DataFrame, max_rows: int | None) -> list:
+    """``df.collect()``, or with *max_rows* set, a take of at most
+    ``max_rows + 1`` rows that raises QueryError when there are more than
+    *max_rows*. Over a small aggregate, which AQE coalesces into one
+    partition, the take is a single job."""
+    if max_rows is None:
+        return df.collect()
+    rows = df.limit(max_rows + 1).collect()
+    if len(rows) > max_rows:
+        raise _too_many_rows(max_rows)
+    return rows
+
+
+class _CachedSlice:
+    """A slice-cache entry: a query's unordered result, pinned in Spark
+    storage (a persisted or checkpointed frame), or collected to the
+    driver as *rows* of *schema*, with a DataFrame over them built only
+    when a Spark plan first needs one. Collected rows never read the
+    source again."""
+
+    def __init__(self, df, rows: list | None = None, schema=None):
+        self._df = df  # DataFrame, or a 0-arg thunk building one over rows
+        self.rows = rows  # None for a pinned frame
+        self.schema = schema
+
+    @property
+    def df(self) -> DataFrame:
+        if callable(self._df):
+            self._df = self._df()
+        return self._df
+
+    def collect(self) -> list:
+        return list(self.rows) if self.rows is not None else self.df.collect()
+
+    def unpersist(self) -> None:
+        if not callable(self._df):
+            self._df.unpersist()
 
 
 def keyset_page(df: DataFrame, keys: list[str], after: tuple | None, limit: int) -> DataFrame:
@@ -147,9 +244,13 @@ class CuttingBoard:
         # immune to source churn. Default off: for plain batch boards,
         # recompute-on-invalidation is the CORRECT freshness behavior.
         self.snapshot_cache = snapshot_cache
-        # key -> (query, result_df); LRU promote-on-hit like the reference
+        # key -> (query, _CachedSlice); LRU promote-on-hit like the reference
         # deque rotation (/root/reference/bacon/cutting.py:181-202)
         self._cache: OrderedDict = OrderedDict()
+        # bumped by every refresh: a slice records it when planned, and
+        # rows or frames of an older generation are never cached, since
+        # the refresh that followed them did not merge its delta in
+        self._generation = 0
         # the WARM navigation path: _memo_key -> (query, schema, rows) of
         # COLLECTED slice results. Cube results are bounded by group
         # count, so materialized rows are cheap to hold, and a repeat /
@@ -191,15 +292,29 @@ class CuttingBoard:
         accumulator because the lattice stores finished values per grain."""
         self._lattices.append(lattice)
 
-    #: per-entry bound on memoized rows (a slice bigger than this is not a
-    #: navigation result; holding it driver-side would be the render-path
-    #: collect problem this layer exists to avoid)
+    #: per-entry bound on memoized rows, and the bound on the rows of all
+    #: collected slice-cache entries together (a slice bigger than this is
+    #: not a navigation result; holding it driver-side would be the
+    #: render-path collect problem this layer exists to avoid)
     MEMO_MAX_ROWS = 100_000
 
     # --- public API -------------------------------------------------------
     def slice(self, query: CubeQuery) -> Slice:
+        """Answer *query* as a Slice.
+
+        A cached board first tries the driver-side forms (warm memo, cold
+        fold over the eager snapshot), whose slices hold their rows
+        already. Otherwise the slice carries the unordered Spark plan
+        (lattice, cache reuse or a fresh aggregate): ``collect`` runs it
+        as one result job and orders the rows with ``_py_order``, while
+        ``df`` / ``to_df()`` return the plan ordered by ``_order``. A
+        fresh aggregate becomes the cache entry of its (axes, filters)
+        key on first use: the collected rows, which later queries drill
+        and roll up on the driver like the warm memo, or the persisted
+        (``snapshot_cache``: checkpointed) plan when ``df`` comes first."""
+        gen = self._generation  # read before any state the answer uses
         if self.cache_results:
-            local = self._local_slice(query)
+            local = self._local_slice(query, gen)
             if local is not None:
                 return local  # _local_slice/_local_cold recorded the route
         # the cold-fold vs Spark-plan choice (VERDICT r11 next #6): no
@@ -213,9 +328,9 @@ class CuttingBoard:
             axes=query.axes,
             values=query.values,
         )
-        df = self._plan(query)
+        plan, fresh = self._plan(query)
         return Slice(
-            self.cubedef, query, df, board=self if self.cache_results else None
+            self.cubedef, query, None, board=self, plan=plan, fresh=fresh, gen=gen
         )
 
     def rows(self, query: CubeQuery, limit: int | None = None, offset: int = 0) -> DataFrame:
@@ -252,13 +367,16 @@ class CuttingBoard:
             self._rows_memo.clear()
 
     # --- driver-side warm path ---------------------------------------------
-    def _memoize_rows(self, query: CubeQuery, schema, rows) -> None:
-        """Called by Slice.collect(): keep the materialized result for
-        warm navigation. Bounded per entry (MEMO_MAX_ROWS) and in entry
-        count (CACHE_SIZE, LRU)."""
+    def _memoize_rows(self, query: CubeQuery, schema, rows, gen: int) -> None:
+        """Keep a materialized result, answered at refresh generation
+        *gen*, for warm navigation; a refresh since then made it stale.
+        Bounded per entry (MEMO_MAX_ROWS) and in entry count (CACHE_SIZE,
+        LRU)."""
         if len(rows) > self.MEMO_MAX_ROWS:
             return
         with self._lock:
+            if gen != self._generation:
+                return
             self._rows_memo[_memo_key(query)] = (query, schema, list(rows))
             self._rows_memo.move_to_end(_memo_key(query))
             while len(self._rows_memo) > self.CACHE_SIZE:
@@ -299,6 +417,19 @@ class CuttingBoard:
         rows = snap_df.limit(cap + 1).collect()
         if len(rows) > cap:
             return  # too big for a driver-side fold: stay on the Spark path
+        rows = [tuple(r) for r in rows]
+        # float labels are the cold fold's group keys: every NaN becomes
+        # one object, so a dict groups them together as Spark does
+        floats = [
+            i
+            for i, f in enumerate(snap_df.schema.fields[: len(self.cubedef.labels)])
+            if isinstance(f.dataType, (DoubleType, FloatType))
+        ]
+        for n, r in enumerate(rows if floats else ()):
+            if any(r[i] != r[i] for i in floats):
+                rows[n] = tuple(
+                    _NAN if i in floats and v != v else v for i, v in enumerate(r)
+                )
         # finished-value types, resolved ONCE by catalyst analysis (no job)
         # so cold queries never pay per-hit schema analysis
         ftypes = {}
@@ -310,9 +441,9 @@ class CuttingBoard:
             self._snap_fields = {f.name: f for f in snap_df.schema.fields}
             self._snap_minputs = minputs
             self._snap_ftypes = ftypes
-            self._snap_rows = [tuple(r) for r in rows]
+            self._snap_rows = rows
 
-    def _local_cold(self, query: CubeQuery):
+    def _local_cold(self, query: CubeQuery, gen: int):
         """FIRST-hit driver-side aggregation over the eager snapshot: filter
         with the PY_FILTER_OPS twins, group by axis values, fold each
         measure's extracted inputs with its accumulator's ``py_agg``.
@@ -403,7 +534,7 @@ class CuttingBoard:
         made = self._local_made(
             query, out_schema, [tuple(d[c] for c in out_schema.names) for d in out]
         )
-        self._memoize_rows(query, out_schema, made._rows)
+        self._memoize_rows(query, out_schema, made._rows, gen)
         self.local_hits += 1
         decisions.record(
             "cold_fold",
@@ -414,13 +545,14 @@ class CuttingBoard:
         )
         return made
 
-    def _local_slice(self, query: CubeQuery):
-        """Serve *query* entirely driver-side from memoized slice rows —
-        no Spark job. Exact repeats return their memoized rows; drills
-        (eq filters on cached extra axes) filter rows in Python; axis
-        drops re-aggregate via the accumulators' ``py_merge`` twins.
-        Returns None when no memoized parent can answer exactly; the
-        planner then falls through to the persisted-DataFrame cache.
+    def _local_slice(self, query: CubeQuery, gen: int):
+        """Serve *query* entirely driver-side from collected slice rows —
+        the warm memo and the collected slice-cache entries — with no
+        Spark job. Exact repeats return their rows; drills (eq filters on
+        cached extra axes) filter rows in Python; axis drops re-aggregate
+        via the accumulators' ``py_merge`` twins. Returns None when no
+        collected parent can answer exactly; the planner then falls
+        through to the slice cache's Spark plans.
 
         This is the reference's slice-reuse machinery
         (/root/reference/bacon/cutting.py:235-522) applied at its native
@@ -429,11 +561,21 @@ class CuttingBoard:
         path's cost is unchanged by data scale."""
         if any(op not in FILTER_OPS for _, op, _v in query.filters):
             return None
+        mk = _memo_key(query)
         with self._lock:
-            entries = list(self._rows_memo.items())
-            exact = self._rows_memo.get(_memo_key(query))
+            # (query, schema, rows, slice-cache key or None) per parent
+            parents = [(*e, None) for e in self._rows_memo.values()] + [
+                (cq, e.schema, e.rows, k)
+                for k, (cq, e) in self._cache.items()
+                if e.rows is not None
+            ]
+            exact = self._rows_memo.get(mk)
+            if exact is None:
+                exact = next((p for p in parents if _memo_key(p[0]) == mk), None)
+                if exact is not None:
+                    self._cache.move_to_end(exact[3])  # promote on hit
         if exact is not None:
-            _, schema, rows = exact
+            schema, rows = exact[1], exact[2]
             self.local_hits += 1
             decisions.record(
                 "cold_fold",
@@ -445,7 +587,7 @@ class CuttingBoard:
             return self._local_made(query, schema, rows)
         wanted_vals = set(query.values)
         fq = frozenset((n, op, _freeze_value(v)) for n, op, v in query.filters)
-        for _key, (pq, schema, rows) in entries:
+        for pq, schema, rows, ckey in parents:
             if not wanted_vals <= set(pq.values):
                 continue
             if not set(query.axes) <= set(pq.axes):
@@ -506,6 +648,10 @@ class CuttingBoard:
                 {c: r[c] for c in (*query.axes, *query.values)} for r in rows
             ]
             self._py_order(query, out)
+            if ckey is not None:
+                with self._lock:
+                    if ckey in self._cache:
+                        self._cache.move_to_end(ckey)  # promote on hit
             self.local_hits += 1
             decisions.record(
                 "cold_fold",
@@ -526,20 +672,16 @@ class CuttingBoard:
                 query, out_schema, [tuple(d[c] for c in out_schema.names) for d in out]
             )
             # memoize the derived result too: further drills chain off it
-            self._memoize_rows(query, out_schema, made._rows)
+            self._memoize_rows(query, out_schema, made._rows, gen)
             return made
-        return self._local_cold(query)
+        return self._local_cold(query, gen)
 
     def _local_made(self, query: CubeQuery, schema, rows) -> Slice:
         """A Slice over already-materialized rows: collect()/renderers
         use them directly (zero Spark work), while to_df() lazily wraps
         them in a DataFrame only if a caller actually wants the plan —
         keeping the driver contract without paying for it per hit."""
-        from pyspark.sql import Row
-
-        if rows and not isinstance(rows[0], Row):
-            mk = Row(*schema.names)
-            rows = [mk(*t) for t in rows]
+        rows = _as_rows(schema, rows)
         spark = self.df.sparkSession
         return Slice(
             self.cubedef,
@@ -555,29 +697,110 @@ class CuttingBoard:
         ``py_merge``."""
         groups: OrderedDict = OrderedDict()
         for r in rows:
-            groups.setdefault(tuple(r[a] for a in query.axes), []).append(r)
+            key = tuple(_group_value(r[a]) for a in query.axes)
+            groups.setdefault(key, []).append(r)
         out = []
-        for key, grp in groups.items():
-            d = dict(zip(query.axes, key))
+        for grp in groups.values():
+            d = {a: grp[0][a] for a in query.axes}
             for v in query.values:
                 d[v] = self.cubedef.get_value(v).acc.py_merge([g[v] for g in grp])
             out.append(d)
         return out
 
-    def _py_order(self, query: CubeQuery, out: list[dict]) -> None:
-        """Driver-side twin of ``_order``: stable sorts applied in
-        reversed priority (axes last-to-first, then the measure order)."""
+    def _py_order(self, query: CubeQuery, out: list) -> None:
+        """Driver-side twin of ``_order`` over dicts or collected Rows:
+        stable sorts applied in reversed priority (axes last-to-first,
+        then the measure order). Axes sort nulls first, or last when
+        reversed; the measure sorts None as 0; NaN is the largest value
+        in both (``_sort_key``)."""
+        if not out:
+            return
+
+        def column(name):
+            if isinstance(out[0], dict):
+                return itemgetter(name)
+            return itemgetter(out[0].__fields__.index(name))
+
         for a in reversed(query.axes):
-            label = self.cubedef.get_label(a)
-            out.sort(key=lambda d, a=a: (d[a] is not None, d[a]), reverse=label.reverse)
+            get = column(a)
+            out.sort(
+                key=lambda r: _sort_key(get(r)),
+                reverse=self.cubedef.get_label(a).reverse,
+            )
         if query.order:
             sign, value_name, _pv = query.order
             # mirror _order exactly: any OUTPUT column qualifies (axes too)
             if value_name in query.values or value_name in query.axes:
-                out.sort(
-                    key=lambda d: d[value_name] if d[value_name] is not None else 0,
-                    reverse=sign < 0,
-                )
+                get = column(value_name)
+
+                def measure_key(r):
+                    v = get(r)
+                    return _sort_key(0 if v is None else v)
+
+                out.sort(key=measure_key, reverse=sign < 0)
+
+    def _cache_entry(self, query: CubeQuery, entry: _CachedSlice, gen: int):
+        """Make *entry*, answered at refresh generation *gen*, the cache
+        entry for *query*'s (axes, filters) key and return it. A refresh
+        since *gen* did not merge its delta into the entry, so it is
+        released instead and None returned. Releases the entry it
+        replaces, the least recently used past CACHE_SIZE entries, and
+        the least recently used collected entries past MEMO_MAX_ROWS
+        rows in all."""
+        key = _cache_key(query)
+        with self._lock:
+            if gen != self._generation:
+                entry.unpersist()
+                return None
+            old = self._cache.pop(key, None)
+            if old is not None:
+                old[1].unpersist()
+            self._cache[key] = (query, entry)
+            while len(self._cache) > self.CACHE_SIZE:
+                _, (_, evicted) = self._cache.popitem(last=False)
+                evicted.unpersist()
+            held = [(k, e) for k, (_, e) in self._cache.items() if e.rows is not None]
+            total = sum(len(e.rows) for _, e in held)
+            for k, e in held:
+                if total <= self.MEMO_MAX_ROWS:
+                    break
+                del self._cache[k]
+                e.unpersist()
+                total -= len(e.rows)
+        return entry
+
+    def _pin(self, query: CubeQuery, plan: DataFrame, gen: int):
+        """Cache a fresh aggregate plan in Spark storage (see
+        ``_cache_entry``)."""
+        if self.snapshot_cache:
+            pinned = plan.localCheckpoint(eager=True)
+        else:
+            pinned = plan.persist(StorageLevel.MEMORY_AND_DISK)
+        return self._cache_entry(query, _CachedSlice(pinned), gen)
+
+    def _collected(self, schema, rows: list) -> _CachedSlice:
+        """A cache entry of collected *rows*."""
+        spark = self.df.sparkSession
+        return _CachedSlice(lambda: spark.createDataFrame(rows, schema), rows, schema)
+
+    def _cache_rows(self, query: CubeQuery, plan: DataFrame, rows: list, gen: int):
+        """Cache a collected fresh aggregate as its rows (see
+        ``_cache_entry``); a result past MEMO_MAX_ROWS stays off the
+        driver and is pinned instead."""
+        if len(rows) > self.MEMO_MAX_ROWS:
+            return self._pin(query, plan, gen)
+        return self._cache_entry(query, self._collected(plan.schema, list(rows)), gen)
+
+    def _freeze_cache(self) -> None:
+        """Make every cache entry a snapshot, as ``snapshot_cache`` makes
+        new ones: checkpoint the persisted frames (collected rows are
+        snapshots already)."""
+        with self._lock:
+            for key, (cq, entry) in list(self._cache.items()):
+                if entry.rows is None:
+                    frozen = _CachedSlice(entry.df.localCheckpoint(eager=True))
+                    self._cache[key] = (cq, frozen)
+                    entry.unpersist()
 
     def refresh(self, delta_df: DataFrame, grow_base: bool = True) -> None:
         """Incrementally fold *delta_df* (newly-arrived rows, same schema)
@@ -597,50 +820,81 @@ class CuttingBoard:
         ``grow_base=False`` skips extending the base frame — pass it when
         the base already references the storage the deltas land in (the
         streaming-maintenance case, streaming/incremental.py), where a
-        union per micro-batch would grow the plan tree without bound."""
-        if grow_base:
-            self.df = self.df.unionByName(delta_df)
-        # registered lattices are consulted FIRST by the planner, so they
-        # must absorb the delta too (or stop being consulted): mergeable
-        # lattices fold it in, non-mergeable ones are unregistered and
-        # queries fall back to cache/compute over the grown base
-        for lat in list(self._lattices):
-            if lat.reaggregatable:
-                lat.refresh(delta_df)
-            else:
-                self._lattices.remove(lat)
-                lat.unpersist()
-        # the eager snapshot describes the pre-refresh base: rebuild it
-        # over the grown frame (one bounded job, same cap discipline)
-        if self._snap_rows is not None:
-            self._snap_rows = None
-            self._build_snapshot(self._snap_cap)
+        union per micro-batch would grow the plan tree without bound.
+
+        The whole refresh holds the board lock and starts a new
+        generation: a slice planned before it may still be collected, but
+        its pre-refresh answer is not cached (``_cache_entry``)."""
         with self._lock:
+            self._generation += 1
+            if grow_base:
+                self.df = self.df.unionByName(delta_df)
+            # registered lattices are consulted FIRST by the planner, so
+            # they must absorb the delta too (or stop being consulted):
+            # mergeable lattices fold it in, non-mergeable ones are
+            # unregistered and queries fall back to cache/compute over the
+            # grown base
+            for lat in list(self._lattices):
+                if lat.reaggregatable:
+                    lat.refresh(delta_df)
+                else:
+                    self._lattices.remove(lat)
+                    lat.unpersist()
+            # the eager snapshot describes the pre-refresh base: rebuild it
+            # over the grown frame (one bounded job, same cap discipline)
+            if self._snap_rows is not None:
+                self._snap_rows = None
+                self._build_snapshot(self._snap_cap)
             # memoized rows describe the pre-refresh data: all stale
             self._rows_memo.clear()
-            entries = list(self._cache.items())
-            for key, (cq, cdf) in entries:
+            for key, (cq, entry) in list(self._cache.items()):
                 if not all(
                     self.cubedef.get_value(v).acc.reaggregatable for v in cq.values
                 ):
                     del self._cache[key]
-                    cdf.unpersist()
+                    entry.unpersist()
                     continue
                 delta_slice = self._aggregate_frame(cq, delta_df)
-                # snapshot the merge (localCheckpoint = compute now, forget
-                # lineage): its plan reads the old cached slice and the
-                # delta — a micro-batch only readable during its batch —
-                # and left lazy it could silently recompute over a base
-                # that already contains the delta (double count)
-                merged = self._reaggregate(
-                    cdf.unionByName(delta_slice), cq
-                ).localCheckpoint(eager=True)
+                if entry.rows is not None and all(
+                    self.cubedef.get_value(v).acc.py_merge is not None
+                    for v in cq.values
+                ):
+                    # collected rows merge on the driver: a DataFrame over
+                    # driver rows would run its jobs through Python workers
+                    merged = self._merge_collected(cq, entry, delta_slice.collect())
+                else:
+                    # snapshot the merge (localCheckpoint = compute now,
+                    # forget lineage): its plan reads the old cached slice
+                    # and the delta — a micro-batch only readable during
+                    # its batch — and left lazy it could silently recompute
+                    # over a base that already contains the delta (double
+                    # count)
+                    merged = _CachedSlice(
+                        self._reaggregate(
+                            entry.df.unionByName(delta_slice), cq
+                        ).localCheckpoint(eager=True)
+                    )
                 self._cache[key] = (cq, merged)
-                cdf.unpersist()
+                entry.unpersist()
+
+    def _merge_collected(self, query: CubeQuery, entry, delta_rows) -> _CachedSlice:
+        """Fold collected delta rows into a collected cache entry with the
+        accumulators' ``py_merge`` twins, ordered for *query*."""
+        out = self._py_reaggregate(query, entry.rows + delta_rows)
+        self._py_order(query, out)
+        names = entry.schema.names
+        rows = _as_rows(entry.schema, [tuple(d[c] for c in names) for d in out])
+        return self._collected(entry.schema, rows)
 
     # --- planning ----------------------------------------------------------
-    def _plan(self, query: CubeQuery) -> DataFrame:
+    def _plan(self, query: CubeQuery) -> tuple[DataFrame, bool]:
         """Choose the min-cost plan over cached slices, else compute.
+        Returns the unordered result plan and whether it is a fresh
+        aggregate, which the Slice makes the query's cache entry on first
+        use (``_cache_rows`` / ``_pin``). A collected entry reaches this
+        only for what its rows cannot answer on the driver (no Python
+        twin of a filter op or of a measure's merge): the plan then runs
+        over a DataFrame of the rows.
 
         Cost model mirrors the reference: 1 = pointer share, 2 = drill
         filter, 10 = re-aggregation
@@ -648,37 +902,26 @@ class CuttingBoard:
         Registered lattices answer covered queries at cost ~1."""
         lat_df = self._lattice_plan(query)
         if lat_df is not None:
-            return self._order(lat_df, query)
+            return lat_df, False
         if not self.cache_results:
-            return self._order(self._aggregate(query), query)
+            return self._aggregate(query), False
 
         plans = []
         with self._lock:
             entries = list(self._cache.items())
-        for key, (cq, cdf) in entries:
-            p = self._reuse_plan(query, cq, cdf)
+        for key, (cq, entry) in entries:
+            p = self._reuse_plan(query, cq)
             if p is not None:
-                plans.append((p[0], key, p[1]))
+                plans.append((p[0], key, p[1], entry))
                 if p[0] == 1:
                     break
         if plans:
-            cost, key, make = min(plans, key=lambda t: t[0])
+            _cost, key, make, entry = min(plans, key=lambda t: t[0])
             with self._lock:
                 if key in self._cache:
                     self._cache.move_to_end(key)  # promote on hit
-            return self._order(make(), query)
-
-        result = self._aggregate(query)
-        if self.snapshot_cache:
-            result = result.localCheckpoint(eager=True)
-        else:
-            result = result.persist(StorageLevel.MEMORY_AND_DISK)
-        with self._lock:
-            self._cache[_cache_key(query)] = (query, result)
-            while len(self._cache) > self.CACHE_SIZE:
-                _, (_, old) = self._cache.popitem(last=False)
-                old.unpersist()
-        return self._order(result, query)
+            return make(entry.df), False
+        return self._aggregate(query), True
 
     def _lattice_plan(self, query: CubeQuery) -> DataFrame | None:
         """Serve from a registered lattice when it covers the query.
@@ -766,8 +1009,10 @@ class CuttingBoard:
             return df.select(*query.axes, *query.values)
         return rescan(miss)
 
-    def _reuse_plan(self, query: CubeQuery, cached_q: CubeQuery, cached_df: DataFrame):
-        """Return (cost, thunk) if the cached slice can answer *query*."""
+    def _reuse_plan(self, query: CubeQuery, cached_q: CubeQuery):
+        """Return (cost, make) if the slice cached for *cached_q* can
+        answer *query*; ``make`` maps the cached frame to the query's
+        unordered result."""
         wanted_vals = set(query.values)
         if not wanted_vals <= set(cached_q.values):
             return None
@@ -780,7 +1025,7 @@ class CuttingBoard:
         # violates the output contract (found by the navigation fuzz —
         # a subset query got the parent's extra measure columns).
         if query.axes == cached_q.axes and fq == fc:
-            return 1, lambda: cached_df.select(*query.axes, *query.values)
+            return 1, lambda df: df.select(*query.axes, *query.values)
 
         # drill: cached axes = query axes + extra axes, and the query adds
         # eq filters on exactly those extra axes -> filter cached RESULT
@@ -792,8 +1037,7 @@ class CuttingBoard:
                 if not self._reaggregatable(query, needed=bool(extra_axes)):
                     return None
 
-                def make_drill():
-                    df = cached_df
+                def make_drill(df):
                     for a, v in drill.items():
                         df = df.filter(F.col(a).isNull() if v is None else F.col(a) == F.lit(v))
                     return self._reaggregate(df, query)
@@ -805,7 +1049,7 @@ class CuttingBoard:
         # roll-up: same filters, query axes subset of cached axes
         if fq == fc and set(query.axes) < set(cached_q.axes):
             if self._reaggregatable(query, needed=True):
-                return 10, lambda: self._reaggregate(cached_df, query)
+                return 10, lambda df: self._reaggregate(df, query)
         return None
 
     def _reaggregatable(self, query: CubeQuery, needed: bool) -> bool:
@@ -991,22 +1235,38 @@ class Slice:
         self,
         cubedef: CubeDef,
         query: CubeQuery,
-        df: DataFrame,
+        df: DataFrame | None,
         _prefix=(),
         board=None,
         rows=None,
+        plan: DataFrame | None = None,
+        fresh: bool = False,
+        gen: int = 0,
     ):
         self.cubedef = cubedef
         self.query = query
-        self._df = df  # DataFrame, or a 0-arg thunk building one lazily
+        # the result frame, or a 0-arg thunk building one lazily; None for
+        # a board's Spark-routed slice, whose ordered frame is built from
+        # *plan* on first use
+        self._df = df
         self._prefix = _prefix
         self._tree = None
-        self._board = board  # feeds collected rows back to the warm memo
+        self._board = board  # orders *plan*, caches and memoizes its rows
+        self._plan = plan  # the board's unordered result plan
+        self._fresh = fresh  # plan is a fresh aggregate: cache it on first use
+        self._gen = gen  # the board's refresh generation at planning
+        self._entry = None  # the cache entry made from a fresh plan
         self._rows = rows  # prefetched rows (warm path): collect() is free
 
     @property
     def df(self) -> DataFrame:
-        if callable(self._df):
+        if self._df is None:
+            if self._fresh:
+                self._fresh = False
+                self._entry = self._board._pin(self.query, self._plan, self._gen)
+            frame = self._plan if self._entry is None else self._entry.df
+            self._df = self._board._order(frame, self.query)
+        elif callable(self._df):
             self._df = self._df()
         return self._df
 
@@ -1021,34 +1281,37 @@ class Slice:
     def collect(self, max_rows: int | None = None) -> list:
         """Materialize the result rows ONCE per slice, memoized — repeat
         renders and board-level warm navigation reuse them without a new
-        Spark job (the reference's cached-slice walk,
-        /root/reference/bacon/cutting.py:235-271).
+        Spark job (the reference's cached-slice walk).
+
+        A board's Spark-routed slice runs its unordered plan as one result
+        job and orders the rows on the driver with the board's
+        ``_py_order``, the same order ``to_df()`` gives. A fresh aggregate
+        leaves the collected rows as its slice-cache entry, which serves
+        warm navigation on the driver; a cached board memoizes any other
+        collected result. Nothing is cached when the board was refreshed
+        after this slice was planned.
 
         *max_rows* is the render-path cardinality guard: when set, the
-        collect is probed with ``limit(max_rows + 1)`` and a larger slice
-        raises QueryError instead of collecting the world — a pivot on a
-        high-cardinality axis fails fast and pageable."""
-        if self._rows is None:
-            if max_rows is not None:
-                got = self.df.limit(max_rows + 1).collect()
-                if len(got) > max_rows:
-                    raise QueryError(
-                        f"slice has more than {max_rows} rows; refusing to "
-                        "collect for rendering — add filters, drop an axis, "
-                        "or page through rows()/keyset_page instead"
-                    )
-                self._rows = got
-            else:
-                self._rows = self.df.collect()
-            if self._board is not None:
-                self._board._memoize_rows(self.query, self.df.schema, self._rows)
-        elif max_rows is not None and len(self._rows) > max_rows:
-            raise QueryError(
-                f"slice has more than {max_rows} rows; refusing to "
-                "collect for rendering — add filters, drop an axis, "
-                "or page through rows()/keyset_page instead"
-            )
-        return self._rows
+        collect brings back at most ``max_rows + 1`` rows and a larger
+        slice raises QueryError instead of collecting the world — a pivot
+        on a high-cardinality axis fails fast and pageable."""
+        if self._rows is not None:
+            if max_rows is not None and len(self._rows) > max_rows:
+                raise _too_many_rows(max_rows)
+            return self._rows
+        if self._plan is None:
+            self._rows = _collect_at_most(self.df, max_rows)
+            return self._rows
+        board, plan = self._board, self._plan
+        rows = _collect_at_most(plan, max_rows)
+        board._py_order(self.query, rows)
+        if self._fresh:
+            self._fresh = False
+            self._entry = board._cache_rows(self.query, plan, rows, self._gen)
+        elif board.cache_results:
+            board._memoize_rows(self.query, plan.schema, rows, self._gen)
+        self._rows = rows
+        return rows
 
     # --- collected navigation ------------------------------------------------
     @property
@@ -1086,12 +1349,11 @@ class Slice:
         child = Slice(
             self.cubedef,
             self.query,
-            self._df,
+            lambda: self.df,
             self._prefix + (value,),
-            board=self._board,
-            rows=self._rows,
+            rows=self.collect(),
         )
-        child._tree = self._tree
+        child._tree = self._collect()
         return child
 
     def keys(self) -> list:
@@ -1101,7 +1363,7 @@ class Slice:
             return []
         label = self.cubedef.get_label(self.axes[0])
         ks = list(self._subtree().keys())
-        ks.sort(key=lambda v: (v is not None, v), reverse=label.reverse)
+        ks.sort(key=_sort_key, reverse=label.reverse)
         return ks
 
     def __iter__(self):
@@ -1172,7 +1434,7 @@ class SliceMatrix:
         def keysort(keys, axes):
             for i in range(len(axes) - 1, -1, -1):
                 label = cd.get_label(axes[i])
-                keys.sort(key=lambda k, i=i: (k[i] is not None, k[i]), reverse=label.reverse)
+                keys.sort(key=lambda k, i=i: _sort_key(k[i]), reverse=label.reverse)
             return keys
 
         self._row_keys = keysort(row_keys, self.row_axes)

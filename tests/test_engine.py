@@ -20,7 +20,9 @@ from bacon_spark import (
     CuttingBoard,
     Group,
     Label,
+    Max,
     Measure,
+    Min,
     MonthLabel,
     Sum,
     YearLabel,
@@ -455,4 +457,182 @@ def test_cached_value_superset_projects_to_query_columns(cubedef, sells):
     )
     s2 = b.slice(q_re)
     assert s2.to_df().columns == ["month", "item", "twice", "number", "n"]
+    b.clear_cache()
+
+
+# --- driver-side order and the one-job collect path --------------------------
+
+
+def _nan_safe(rows):
+    """Row tuples with NaN replaced by a marker, so equal orders compare
+    equal (NaN != NaN in Python)."""
+    return [
+        tuple("NaN" if isinstance(v, float) and v != v else v for v in r)
+        for r in rows
+    ]
+
+
+@pytest.mark.parametrize("descending", [False, True])
+def test_driver_order_matches_spark_with_nan_and_null(spark, descending):
+    """Spark sorts NaN above every number and treats NaN = NaN; the
+    measure order counts None as 0; axes sort nulls first (last when
+    reversed). The cold fold, the warm memo and a collected Spark slice
+    must each give the order of ``to_df().collect()``."""
+    nan = float("nan")
+    df = spark.createDataFrame(
+        [
+            ("a", 1.0, 3.0),
+            ("b", nan, nan),
+            ("c", nan, 1.0),
+            ("d", None, None),
+            ("e", -2.0, 2.0),
+            ("f", 1.0, -1.0),
+        ],
+        "k string, x double, v double",
+    )
+    cd = CubeDef("t")
+    cd.add_label(Label("k"))
+    cd.add_label(Label("x", reverse=descending))
+    cd.add_measure(Measure("o", "v", acc=Sum()))
+    cd.add_measure(Measure("mn", "v", acc=Min()))
+    cd.add_measure(Measure("mx", "v", acc=Max()))
+    by_measure = CubeQuery().add_axis("k").add_value("o").set_order("o", descending)
+    by_axis = CubeQuery().add_axis("x").add_value("o").add_value("mn").add_value("mx")
+    # warm parents: the same view unordered, and a finer view to roll up
+    # (the rollup groups the two NaN rows of x into one, as Spark does, and
+    # their min is 1.0, their max NaN)
+    parents = {by_measure: by_measure.unset_order(), by_axis: by_axis.add_axis("k")}
+    for q, parent in parents.items():
+        want = _nan_safe(CuttingBoard(cd, df, cache_results=False).slice(q).to_df().collect())
+        assert len(want) == (6 if q is by_measure else 4)
+
+        cold = CuttingBoard(cd, df, eager_snapshot_rows=100)
+        assert _nan_safe(cold.slice(q).collect()) == want
+        assert cold.local_hits == 1
+
+        warm = CuttingBoard(cd, df)
+        warm.slice(parent).collect()
+        assert _nan_safe(warm.slice(q).collect()) == want
+        assert warm.local_hits == 1
+
+        sliced = CuttingBoard(cd, df).slice(q)
+        assert _nan_safe(sliced.collect()) == want
+        assert _nan_safe(sliced.to_df().collect()) == want
+
+
+def test_cold_spark_table1d_runs_one_result_job(spark, tmp_path):
+    """A cold Spark-routed slice runs its unordered plan once (the shuffle
+    map stage plus one result job), orders the rows on the driver, and
+    leaves them as the slice-cache entry: no persist for a second job to
+    materialize, and no Spark-side sort. ``to_df()`` keeps the ordered
+    plan, and the render guard still raises."""
+    from bacon_spark.errors import QueryError
+    from bacon_spark.observers.tables import Table1D
+
+    path = str(tmp_path / "sells")
+    rows = [
+        (dt.date(2010, 1 + i % 3, 1 + i % 25), ["apples", "pears"][i % 2],
+         ["italy", "england"][i % 3 == 0], float(i))
+        for i in range(500)
+    ]
+    spark.createDataFrame(
+        rows, "date date, item string, place string, number double"
+    ).write.parquet(path)
+    cd = CubeDef("sells")
+    cd.add_label(MonthLabel("month", "date"))
+    cd.add_label(Label("item"))
+    cd.add_label(Label("place"))
+    cd.add_measure(Measure("number", acc=Sum()))
+    q = (
+        CubeQuery().add_axis("month").add_axis("item").add_value("number")
+        .set_order("number", descending=True)
+    )
+
+    b = CuttingBoard(cd, spark.read.parquet(path), cache_results=True)
+    sc = spark.sparkContext
+    group = f"cold-table1d-{id(b):x}"
+    sc.setJobGroup(group, group)
+    try:
+        table = Table1D(b, q)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 2
+    assert table.nrows == 6
+    assert len(b._cache) == 1  # the collected rows are the cache entry
+
+    fresh = CuttingBoard(cd, spark.read.parquet(path), cache_results=False).slice(q)
+    ordered = fresh.to_df()
+    assert "Sort" in ordered._jdf.queryExecution().optimizedPlan().toString()
+    want = ordered.collect()
+    s = CuttingBoard(cd, spark.read.parquet(path), cache_results=True).slice(q)
+    assert s.collect() == want
+    assert [tuple(r.values()) for r in table.rows()] == [tuple(r) for r in want]
+
+    with pytest.raises(QueryError, match="refusing to collect"):
+        CuttingBoard(cd, spark.read.parquet(path)).slice(q).collect(max_rows=5)
+    with pytest.raises(QueryError, match="refusing to collect"):
+        s.collect(max_rows=5)
+    b.clear_cache()
+
+
+def test_collected_entry_serves_navigation_on_driver(cubedef, sells):
+    """A collected fresh aggregate is held once, as its slice-cache entry
+    (not also in the warm memo), and serves exact repeats, drills and
+    roll-ups on the driver even after the memo has lost every view."""
+    b = CuttingBoard(cubedef, sells)
+    q = (
+        CubeQuery().add_axis("month").add_axis("item").add_value("number")
+        .set_order("number", descending=True)
+    )
+    b.slice(q).collect()
+    assert len(b._cache) == 1 and len(b._rows_memo) == 0
+    (_cq, entry), = b._cache.values()
+    assert entry.rows is not None and callable(entry._df)
+
+    plain = CuttingBoard(cubedef, sells, cache_results=False)
+    views = [
+        q,
+        q.unset_order(),
+        q.remove_axis("item"),
+        q.add_filter("item", "eq", "apples"),
+    ]
+    for view in views:
+        b._rows_memo.clear()  # the memo churned past the view
+        hits = b.local_hits
+        assert b.slice(view).collect() == plain.slice(view).to_df().collect()
+        assert b.local_hits == hits + 1
+    assert callable(entry._df)  # no DataFrame was built over the rows
+    b.clear_cache()
+
+
+def test_driver_grouping_keys_arrays_by_value(spark):
+    """Array-valued axes (SetLabel) group by value on the driver, as in
+    Spark: a warm rollup that keeps one, and a refresh that merges a delta
+    into a collected cache entry, answer as a fresh Spark board does."""
+    from bacon_spark.cubedef import SetLabel
+
+    schema = "k string, tags array<string>, v long"
+    df = spark.createDataFrame(
+        [("a", ["red"], 1), ("b", ["red"], 2), ("a", ["blue", "red"], 3), ("b", None, 4)],
+        schema,
+    )
+    delta = spark.createDataFrame([("c", ["red"], 10), ("a", ["blue", "red"], 20)], schema)
+    cd = CubeDef("t")
+    cd.add_label(Label("k"))
+    cd.add_label(SetLabel("tags"))
+    cd.add_measure(Measure("v", acc=Sum()))
+    fine = CubeQuery().add_axis("tags").add_axis("k").add_value("v")
+    coarse = fine.remove_axis("k")
+
+    b = CuttingBoard(cd, df)
+    b.slice(fine).collect()
+    want = CuttingBoard(cd, df, cache_results=False).slice(coarse).to_df().collect()
+    assert b.slice(coarse).collect() == want
+    assert b.local_hits == 1
+
+    b.refresh(delta)
+    grown = CuttingBoard(cd, df.unionByName(delta), cache_results=False)
+    for q in (fine, coarse):
+        assert b.slice(q).collect() == grown.slice(q).to_df().collect()
+    assert b.local_hits == 3
     b.clear_cache()

@@ -81,6 +81,92 @@ def test_refresh_merges_cached_slices(cubedef, spark):
     b.clear_cache()
 
 
+def test_refresh_merges_collected_entry_on_driver(cubedef, spark):
+    """A collected slice's cache entry is its rows; refresh merges the
+    delta into them on the driver, so revisiting the view after refresh
+    runs no Spark job and still equals a full recompute over base+delta,
+    in order."""
+    base = spark.createDataFrame(BASE, SCHEMA)
+    delta = spark.createDataFrame(DELTA, SCHEMA)
+    b = CuttingBoard(cubedef, base)
+    q = (
+        CubeQuery().add_axis("month").add_axis("item").add_value("number").add_value("n")
+        .set_order("number", descending=True)
+    )
+    b.slice(q).collect()
+    (_cq, entry), = b._cache.values()
+    assert sorted(map(tuple, entry.collect())) == sorted(
+        map(tuple, CuttingBoard(cubedef, base, cache_results=False).slice(q).collect())
+    )
+
+    b.refresh(delta)
+    hits = b.local_hits
+    s = b.slice(q)
+    assert s._rows is not None and b.local_hits == hits + 1  # no Spark job
+    fresh = CuttingBoard(cubedef, base.unionByName(delta), cache_results=False)
+    assert s.collect() == fresh.slice(q).to_df().collect()
+    b.clear_cache()
+
+
+def test_refresh_between_slice_and_collect_caches_nothing_stale(cubedef, spark):
+    """A slice planned before a refresh (a foreachBatch refresh can land
+    between ``slice`` and ``collect``) answers with the pre-refresh rows,
+    but neither caches nor memoizes them: the refresh did not merge its
+    delta into them. A later exact revisit and a roll-up of the view
+    equal a recompute over base+delta."""
+    base = spark.createDataFrame(BASE, SCHEMA)
+    delta = spark.createDataFrame(DELTA, SCHEMA)
+    grown = CuttingBoard(cubedef, base.unionByName(delta), cache_results=False)
+    q = CubeQuery().add_axis("month").add_axis("item").add_value("number").add_value("n")
+    rollup = q.remove_axis("item")
+
+    for use in ("collect", "to_df"):
+        b = CuttingBoard(cubedef, base)
+        s = b.slice(q)
+        b.refresh(delta)
+        old = CuttingBoard(cubedef, base, cache_results=False).slice(q).to_df().collect()
+        got = s.collect() if use == "collect" else s.to_df().collect()
+        assert got == old
+        assert len(b._cache) == 0 and len(b._rows_memo) == 0
+        assert b.slice(q).collect() == grown.slice(q).to_df().collect()
+        assert b.slice(rollup).collect() == grown.slice(rollup).to_df().collect()
+        b.clear_cache()
+
+
+def test_collected_entry_past_memo_bound_is_pinned(cubedef, spark):
+    """A collected result over MEMO_MAX_ROWS is not held on the driver as
+    a cache entry: the plan is persisted instead, and still serves reuse."""
+    b = CuttingBoard(cubedef, spark.createDataFrame(BASE, SCHEMA))
+    b.MEMO_MAX_ROWS = 2
+    q = CubeQuery().add_axis("month").add_axis("item").add_value("number")
+    assert len(b.slice(q).collect()) == 3
+    (_cq, entry), = b._cache.values()
+    assert entry.rows is None
+    rollup = b.slice(q.remove_axis("item"))
+    assert {r["month"]: r["number"] for r in rollup.collect()} == {
+        dt.date(2010, 1, 1): 281, dt.date(2010, 2, 1): 50
+    }
+    assert len(b._cache) == 1
+    b.clear_cache()
+
+
+def test_collected_entries_share_one_row_budget(cubedef, spark):
+    """Collected cache entries hold at most MEMO_MAX_ROWS rows together:
+    a new one evicts the least recently used until the rows fit."""
+    b = CuttingBoard(cubedef, spark.createDataFrame(BASE, SCHEMA))
+    b.MEMO_MAX_ROWS = 5
+    by_item = CubeQuery().add_axis("item").add_value("number")  # 2 rows
+    by_place = CubeQuery().add_axis("place").add_value("number")  # 2 rows
+    by_month_item = by_item.add_axis("month")  # 3 rows
+    b.slice(by_item).collect()
+    b.slice(by_place).collect()
+    assert len(b._cache) == 2
+    b.slice(by_month_item).collect()
+    assert [cq.axes for cq, _e in b._cache.values()] == [("place",), ("item", "month")]
+    assert sum(len(e.rows) for _cq, e in b._cache.values()) <= 5
+    b.clear_cache()
+
+
 def test_refresh_evicts_non_mergeable(cubedef, spark):
     base = spark.createDataFrame(BASE, SCHEMA)
     delta = spark.createDataFrame(DELTA, SCHEMA)
